@@ -140,8 +140,14 @@ object Bench {
       .map { case (k, t) => s"""{"query":"$k","retime":${f(t)}}""" }
       .getOrElse("null")
     val total = ok.map(best(_)).sum
+    // the session the numbers were taken on: the master SPARK_GRAFT_CPUS
+    // resolved to, its task slots, and the host's processors (local[32]
+    // on a 4-processor box is a different machine from local[32] on 32)
+    val ctx = spark.sparkContext
+    val where = s""""master":"${ctx.master}","cores":${ctx.defaultParallelism},""" +
+      s""""host_cpus":${Runtime.getRuntime.availableProcessors}"""
     val json =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","sink":"noop","passes":$passes,"machine_factor":${f(mf)},"second_chance":$sc,"failed":$fs,"budget_violations":$bv,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","sink":"noop","passes":$passes,$where,"machine_factor":${f(mf)},"second_chance":$sc,"failed":$fs,"budget_violations":$bv,"queries":$qs,"sf":"$sfDir"}"""
     // the full line with the 180+-entry per-query map is ~5 KB — long
     // enough that the round driver's truncated log-tail capture has
     // dropped it before (BENCH_r08 "parsed": null). Bracket it with a
@@ -149,7 +155,7 @@ object Bench {
     // after, so whichever end of the log survives capture still
     // contains a complete parseable `"metric":"total"` object.
     val compact =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","sink":"noop","passes":$passes,"n_queries":${ok.size},"failed":$fs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","sink":"noop","passes":$passes,$where,"n_queries":${ok.size},"failed":$fs,"sf":"$sfDir"}"""
     println(compact)
     println(json)
     println(compact)

@@ -1,27 +1,34 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{TextFunctions, TextKernels}
 
-/** Distributed BPE merge learning (Sennrich et al. 2016) — the actual
+/** BPE merge learning (Sennrich et al. 2016) — the actual
   * tokenizer-training step the t51 vocabulary statistics are the
   * precursor for: represent every distinct word as a character symbol
   * sequence, repeatedly count adjacent symbol pairs weighted by word
   * frequency, merge the most frequent pair corpus-wide, and record
   * the learned rule table.
   *
-  * Scale shape: the corpus reduces ONCE to word frequencies [the only
-  * corpus-sized shuffle, map-side combined]; every round after that
-  * works on the VOCABULARY-sized symbol table — pair counting is an
-  * explode + map-side-combined groupBy of that table, the winning
-  * pair is a 1-row distributed TakeOrdered collect (the bounded
-  * driver state: one rule per round, like the k-means centroid
-  * collects), and merge application is a per-row native kernel pass
-  * [[graft.functions.BpeMergeExpr]] with no shuffle. Each round's
-  * frame is cached (lazy persist, populated by the NEXT round's
-  * TakeOrdered action — one job per round), so round r never replays
-  * rounds 1..r−1's lineage; every cached frame unpersists on return.
+  * Scale shape: two steps, split where the data size changes.
+  *  1. Distributed: the corpus reduces ONCE to word frequencies — the
+  *     only corpus-sized work, one map-side-combined aggregate,
+  *     collected once.
+  *  2. Driver: the merge loop runs over the collected (word, freq)
+  *     rows. Each round counts weighted adjacent pairs, picks the
+  *     winner and applies it to every word with
+  *     [[TextKernels.bpeMergeApply]], the kernel [[encode]] runs through
+  *     [[graft.functions.BpeMergeExpr]]. A round is vocabulary-sized
+  *     (31 words at every test scale), so Spark jobs per round would
+  *     pay the per-job floor and a fresh plan for no data: 12 rounds
+  *     as jobs cost ~50 jobs and ~10 s cold, the census alone 3 jobs.
+  *
+  * Design limit: driver memory holds one row per distinct word (its
+  * symbol array and frequency) — the same state a tokenizer trainer
+  * keeps; the corpus itself never leaves the executors.
   */
 object Bpe {
 
@@ -30,14 +37,18 @@ object Bpe {
     * one row per learned rule in order:
     * (step, left, right, merged, pair_count, applied, residual_pairs)
     * where `pair_count` is the weighted adjacent-pair count that won
-    * the round (ties broken (count desc, left, right) so any engine
+    * the round (ties broken (count desc, left, right), strings in
+    * UTF-8 byte order — Spark's string order — so any engine
     * replaying the rule sequence picks the same rules), `applied` is
     * the weighted number of merges actually performed (overlapping
     * runs like "a a a" count 2 pairs but merge once — so applied ≤
     * pair_count), and `residual_pairs` is the weighted count of
-    * (left, right) adjacencies REMAINING after the pass — exactly 0
-    * by the merge-apply contract, which the t55 audit gate enforces.
-    * Stops early if the vocabulary runs out of adjacent pairs.
+    * (left, right) adjacencies REMAINING in the kernel's output —
+    * exactly 0 by the merge-apply contract, which the t55 audit gate
+    * enforces. Symbols are code points (`substring(w, i, 1)`), so a
+    * supplementary character is one symbol. Stops early if the
+    * vocabulary runs out of adjacent pairs (0 rows for an empty corpus
+    * or one of one-character words).
     */
   def learnMerges(docs: DataFrame, textCol: String,
                   numMerges: Int): DataFrame = {
@@ -45,71 +56,56 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val toks = filter(TextDedup.tokens(col(textCol)), x => length(x) > 0)
-    var words = docs.select(explode(toks).as("w"))
+    val vocab = docs.select(explode(toks).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(col("freq"), expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .as("syms"))
-      .persist()
-    val cached = scala.collection.mutable.ArrayBuffer(words)
-    def pairsOf(s: org.apache.spark.sql.Column) =
-      zip_with(slice(s, lit(1), size(s) - 1), slice(s, lit(2), size(s) - 1),
-        (a, b) => struct(a.as("l"), b.as("r")))
-    // ONE action per round: each round's frame is a LAZY persist whose
-    // cache is populated by the next round's TakeOrdered pair collect
-    // (round r's top job computes round r−1's merge exactly once, into
-    // the cache), so the per-round eager-checkpoint job is gone —
-    // numMerges+2 jobs total instead of 2·numMerges+2. A SINGLE
-    // end-of-run stats job unions every round's audit aggregates over
-    // the cached round frames; every cached frame unpersists before
-    // return (the collected rule rows are the only state that leaves).
-    val staged = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long, DataFrame)]
-    var step = 1
+      .collect()
+    val freqs = vocab.map(_.getLong(1))
+    var words: Array[ArrayData] = vocab.map { r =>
+      val w = UTF8String.fromString(r.getString(0))
+      new GenericArrayData(Array.tabulate[AnyRef](w.numChars)(
+        i => w.substring(i, i + 1))): ArrayData
+    }
+    def pairs(syms: ArrayData)(f: (UTF8String, UTF8String) => Unit): Unit =
+      (0 until syms.numElements() - 1).foreach { i =>
+        f(syms.getUTF8String(i), syms.getUTF8String(i + 1))
+      }
+    // (count desc, left asc, right asc), strings compared as UTF-8 bytes
+    val utf8: Ordering[UTF8String] = (a, b) => a.binaryCompare(b)
+    val winnerFirst = Ordering.by[((UTF8String, UTF8String), Long), Long](-_._2)
+      .orElseBy(_._1._1)(utf8).orElseBy(_._1._2)(utf8)
+    val rules = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, String, Long, Long, Long)]
     var exhausted = false
-    while (step <= numMerges && !exhausted) {
-      val top = words
-        .select(col("freq"), explode(pairsOf(col("syms"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val l = top(0).getString(0)
-        val r = top(0).getString(1)
-        val merged = words
-          .select(col("freq"), size(col("syms")).as("len0"),
-            TextFunctions.bpe_merge(col("syms"), l, r).as("syms"))
-          .persist()
-        cached += merged
-        staged += ((step, l, r, top(0).getLong(2), merged))
-        words = merged.select(col("freq"), col("syms"))
-        step += 1
+    while (rules.size < numMerges && !exhausted) {
+      val counts = scala.collection.mutable.HashMap
+        .empty[(UTF8String, UTF8String), Long]
+      words.indices.foreach { k =>
+        pairs(words(k)) { (a, b) =>
+          counts((a, b)) = counts.getOrElse((a, b), 0L) + freqs(k)
+        }
+      }
+      exhausted = counts.isEmpty
+      if (!exhausted) {
+        val ((l, r), c) = counts.min(winnerFirst)
+        val merged = words.map(TextKernels.bpeMergeApply(_, l, r))
+        var applied = 0L
+        var residual = 0L
+        words.indices.foreach { k =>
+          applied += freqs(k) *
+            (words(k).numElements() - merged(k).numElements())
+          pairs(merged(k)) { (a, b) =>
+            if (a == l && b == r) residual += freqs(k)
+          }
+        }
+        words = merged
+        rules += ((rules.size + 1, l.toString, r.toString,
+          l.toString + r.toString, c, applied, residual))
       }
     }
-    if (staged.isEmpty) {
-      cached.foreach(_.unpersist())
-      return Seq.empty[(Int, String, String, String, Long, Long, Long)]
-        .toDF("step", "left", "right", "merged", "pair_count",
-          "applied", "residual_pairs")
-    }
-    val stats = staged.map { case (s, l, r, _, m) =>
-      m.agg(
-        sum(col("freq") * (col("len0") - size(col("syms")))).as("applied"),
-        sum(col("freq") * aggregate(
-          zip_with(slice(col("syms"), lit(1), size(col("syms")) - 1),
-                   slice(col("syms"), lit(2), size(col("syms")) - 1),
-            (a, b) => when(a === l && b === r, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x)).as("residual"))
-        .select(lit(s).as("step"), col("applied"), col("residual"))
-    }.reduce(_ unionByName _).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    cached.foreach(_.unpersist())
-    staged.toSeq.map { case (s, l, r, c, _) =>
-      (s, l, r, l + r, c, stats(s)._1, stats(s)._2)
-    }.toDF("step", "left", "right", "merged", "pair_count",
-      "applied", "residual_pairs")
+    // one partition: ordering the rule table by step (t55, t68) is then
+    // an in-partition sort, not a sampled range shuffle of 3 jobs
+    rules.toSeq.toDF("step", "left", "right", "merged", "pair_count",
+      "applied", "residual_pairs").coalesce(1)
   }
 
   /** ENCODE (the apply step [[learnMerges]] trains for): tokenize each

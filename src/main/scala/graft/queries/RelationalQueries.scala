@@ -282,6 +282,13 @@ object RelationalQueries {
     * flattens the array to a CSV string: the driver's comparator cannot
     * sort/hash array-typed cells, and the array is already
     * deterministically ordered, so the join is lossless.
+    *
+    * A user with no `error` events gets `error_ids = ''` (the join of
+    * an empty array) — what the oracle's `COALESCE(array_agg(...)
+    * FILTER ..., [])` intends. DuckDB 1.0.0 evaluates
+    * `array_to_string([]::BIGINT[], ',')` to NULL instead, so the
+    * oracle check fails on any input with such a user; the engine's
+    * `''` is pinned by RelationalQueriesSpec.
     */
   def q18ConditionalAgg(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)

@@ -839,30 +839,31 @@ object TrainingQueries {
         target = col("lang") === "en")
       .orderBy(col("doc_id"))
 
-  /** t55_bpe — distributed BPE merge learning (the tokenizer-training
-    * step t51's vocabulary statistics precede): 12 merge rules learned
-    * over the corpus word frequencies, each round a vocabulary-sized
-    * pair count + a 1-row TakeOrdered collect + a native per-row
-    * merge-apply pass. Rows-only (the iterative argmax is not
+  /** t55_bpe — BPE merge learning (the tokenizer-training step t51's
+    * vocabulary statistics precede): 12 merge rules learned over the
+    * corpus word frequencies — one distributed word census, collected
+    * once, then a driver loop whose rounds each count weighted pairs
+    * over the vocabulary and apply the winner with the native
+    * merge-apply kernel. Rows-only (the iterative argmax is not
     * SQL-expressible); the Verify quality gate enforces the
     * merge-apply contract on the output — residual (left,right)
     * adjacencies exactly 0 after every pass, 0 < applied ≤
     * pair_count, contiguous steps, merged = left||right — and BpeSpec
-    * pins the exact rule sequence on a hand-computed corpus.
+    * pins the exact rule sequence on a hand-computed corpus and the
+    * 12 rules of the sf0.01 corpus.
     */
   def t55Bpe(spark: SparkSession, sfDir: String): DataFrame =
     bpeRules12(spark, sfDir).orderBy(col("step"))
 
   /** The 12-rule BPE tokenizer trained ONCE per (session, sfDir) —
     * t55, t68, and t250 all call `Bpe.learnMerges(documents, "text",
-    * 12)` with identical parameters on the identical corpus, and each
-    * used to pay the 12-round TakeOrdered training loop (~14
-    * sequential vocabulary-sized jobs) alone. The shared-census
-    * convention (clusteredEmbeddings / exactTriangleCensus): one
-    * cached relation per expensive frame with multiple fixture
-    * consumers. No checkpoint needed — learnMerges returns a
-    * driver-local rule table (one row per rule), already free of
-    * corpus lineage.
+    * 12)` with identical parameters on the identical corpus, so they
+    * share one training: one corpus word census (the only Spark jobs)
+    * plus the driver merge loop. The shared-census convention
+    * (clusteredEmbeddings / exactTriangleCensus): one cached relation
+    * per expensive frame with multiple fixture consumers. No
+    * checkpoint needed — learnMerges returns a driver-local rule table
+    * (one row per rule), already free of corpus lineage.
     */
   private val bpeRulesCache = new graft.SessionCache[DataFrame]
   private def bpeRules12(spark: SparkSession, sfDir: String): DataFrame =

@@ -17,6 +17,12 @@ object JobTrace {
       case rest => ("/root/testdata/sf0.1", rest)
     }
     val spark = graft.GraftSession.toolSession(defaultCpus = "32")
+    try trace(spark, sfDir, names)
+    finally spark.stop()
+  }
+
+  private def trace(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+                    names: List[String]): Unit = {
     graft.GraftSession.warmUp(spark, sfDir)
     graft.queries.TrainingQueries.prewarmFixtures(spark, sfDir)
     val starts = TrieMap.empty[Int, (Long, String, Int)]
@@ -43,19 +49,22 @@ object JobTrace {
       graft.SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[jobtrace] unknown query: $name")
         case Some(fn) =>
-          // warm pass (codegen + any shared census builds)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Thread.sleep(100)
-          println(s"[jobtrace] === $name ===")
-          tracing = true
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(100)
-          tracing = false
-          println(f"[jobtrace] === $name total $w%.2f s ===")
+          // a failing query is logged and skipped; the rest still run
+          try {
+            // warm pass (codegen + any shared census builds)
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Thread.sleep(100)
+            println(s"[jobtrace] === $name ===")
+            tracing = true
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            val w = (System.nanoTime() - t0) / 1e9
+            Thread.sleep(100)
+            println(f"[jobtrace] === $name total $w%.2f s ===")
+          } catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[jobtrace] $name FAILED: $e")
+          } finally tracing = false
       }
     }
-    spark.stop()
   }
 }

@@ -39,6 +39,78 @@ class BpeSpec extends SparkSpec {
     }
   }
 
+  private type Rule = (Int, String, String, String, Long, Long, Long)
+  private val ruleSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("step", IntegerType, nullable = false),
+      StructField("left", StringType), StructField("right", StringType),
+      StructField("merged", StringType),
+      StructField("pair_count", LongType, nullable = false),
+      StructField("applied", LongType, nullable = false),
+      StructField("residual_pairs", LongType, nullable = false)))
+  }
+
+  test("learnMerges: the 12-rule sf0.01 census, all seven columns pinned") {
+    // the rule table t55/t68/t250 share; the literals are the output
+    // of the round-per-job learner, so the driver loop must match it
+    val got = Bpe.learnMerges(
+        graft.Tables.documents(spark, "/root/testdata/sf0.01"), "text", 12)
+      .orderBy($"step").as[Rule].collect().toSeq
+    assert(got == Seq(
+      (1, "e", "r", "er", 4568L, 4568L, 0L),
+      (2, "i", "n", "in", 2760L, 2760L, 0L),
+      (3, "o", "w", "ow", 2747L, 2747L, 0L),
+      (4, "o", "r", "or", 2696L, 2696L, 0L),
+      (5, "s", "t", "st", 2676L, 2676L, 0L),
+      (6, "m", "er", "mer", 1852L, 1852L, 0L),
+      (7, "a", "t", "at", 1845L, 1845L, 0L),
+      (8, "l", "u", "lu", 1831L, 1831L, 0L),
+      (9, "a", "r", "ar", 1758L, 1758L, 0L),
+      (10, "p", "ar", "par", 1758L, 1758L, 0L),
+      (11, "j", "o", "jo", 964L, 964L, 0L),
+      (12, "jo", "in", "join", 964L, 964L, 0L)))
+  }
+
+  test("learnMerges: a supplementary character is ONE symbol") {
+    // U+1F600 is two UTF-16 chars but one code point: split by code
+    // point, "😀😀" is the single pair (😀, 😀), never (\uD83D, \uDE00).
+    // (😀, a) ties (😀, 😀) at 1 and wins on right = "a"
+    val smile = "\uD83D\uDE00"
+    val got = Bpe.learnMerges(Seq(s"$smile$smile ${smile}a").toDF("text"),
+        "text", numMerges = 3)
+      .orderBy($"step").as[Rule].collect().toSeq
+    assert(got == Seq(
+      (1, smile, "a", s"${smile}a", 1L, 1L, 0L),
+      (2, smile, smile, smile + smile, 1L, 1L, 0L)))
+  }
+
+  test("learnMerges: ties order strings by UTF-8 bytes, not UTF-16 chars") {
+    // U+FF21 lowercases to U+FF41 (EF BD 81 in UTF-8); U+1F600 is
+    // F0 9F 98 80. UTF-8 puts U+FF41 first; UTF-16 would put U+1F600
+    // first (surrogate D83D < FF41). Spark's string order is UTF-8's
+    val got = Bpe.learnMerges(Seq("\uFF21x \uD83D\uDE00x").toDF("text"),
+        "text", numMerges = 1)
+      .as[Rule].collect().toSeq
+    assert(got == Seq((1, "\uFF41", "x", "\uFF41x", 1L, 1L, 0L)))
+  }
+
+  test("learnMerges: empty corpus and one-character words learn 0 rules " +
+       "with the full schema") {
+    assert(Bpe.learnMerges(Seq("ab").toDF("text"), "text", 1).schema ==
+      ruleSchema)
+    val empty = Bpe.learnMerges(Seq.empty[String].toDF("text"), "text", 3)
+    assert(empty.schema == ruleSchema)
+    assert(empty.collect().isEmpty)
+    val single = Bpe.learnMerges(
+      Seq("a b c", "a  \uD83D\uDE00", "", null).toDF("text"), "text", 3)
+    assert(single.schema == ruleSchema)
+    assert(single.collect().isEmpty)
+    intercept[IllegalArgumentException] {
+      Bpe.learnMerges(Seq.empty[String].toDF("text"), "text", numMerges = 0)
+    }
+  }
+
   test("bpe_merge column: left-to-right non-overlapping application") {
     val got = Seq(Seq("a", "b", "a", "b", "b")).toDF("syms")
       .select(graft.functions.TextFunctions.bpe_merge($"syms", "a", "b").as("m"))
